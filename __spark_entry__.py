@@ -112,20 +112,34 @@ def _docs_with_planted_dups(
     doc_id+1000000 with ' extra token' appended — guarantees the dedup
     operators have true positives to find. DuckDB twin: _DUP_SQL.
     spread=False for the consumers whose per-doc compute is one cheap
-    hash (the spread exchange costs more than it parallelizes)."""
-    base = _docs(spark, sf_dir, spread=spread).select("doc_id", "text")
-    clones = (
-        base.filter(F.col("doc_id") % 10 == 0)
-        .select(
-            (F.col("doc_id") + 1000000).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" extra token")).alias("text"),
+    hash (the spread exchange costs more than it parallelizes).
+
+    The clones are emitted in-row — one explode over (original,
+    %10 clone, %20 exact copy) with the absent variants dropped — so
+    the result keeps the input's partitions: a union would triple the
+    task count of every Python stage downstream."""
+    doc_id, text = F.col("doc_id"), F.col("text")
+
+    def variant(when, new_id, new_text):
+        return F.when(
+            when, F.struct(new_id.alias("doc_id"), new_text.alias("text"))
         )
+
+    variants = F.array(
+        F.struct(doc_id, text),
+        variant(
+            doc_id % 10 == 0,
+            doc_id + 1000000,
+            F.concat(text, F.lit(" extra token")),
+        ),
+        variant(doc_id % 20 == 0, doc_id + 2000000, text),
     )
-    exact_clones = (
-        base.filter(F.col("doc_id") % 20 == 0)
-        .select((F.col("doc_id") + 2000000).alias("doc_id"), F.col("text"))
+    return (
+        _docs(spark, sf_dir, spread=spread)
+        .select(F.explode(variants).alias("d"))
+        .filter(F.col("d").isNotNull())
+        .select("d.doc_id", "d.text")
     )
-    return base.unionByName(clones).unionByName(exact_clones)
 
 
 _DUP_SQL = """
@@ -1035,8 +1049,9 @@ def q_bpe_encode_trie(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9: trained-table reuse (the heap/trie encoder remains the
     # pre-trained-ARTIFACT path — load_bpe_artifact consumers and
     # tests/test_bpetrain.py differential-test it at k=1000; when the
-    # trainer just ran on this corpus its final table already holds
-    # the identical any-k encode result)
+    # trainer just ran on this corpus its final table holds the same
+    # encode result as the heap/trie encoder — empirically verified at
+    # k=6 / k=1000 on the fixtures, not identical by construction)
     _, table = learn_bpe_merges_and_table(docs, k=BPE_K)
     return bpe_encode_counts_trained(docs, table)
 

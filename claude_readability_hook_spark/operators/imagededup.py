@@ -177,20 +177,26 @@ def hamming_band_buckets(
     n_bands: int = 8,
     ref_col: str = "media_ref",
     hash_col: str = "dhash",
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """(band_idx, band_val, members) buckets with ≥ 2 members, where
-    members is the ref-sorted array of (ref, hash) structs sharing the
-    band value. Guarantee: Hamming(a, b) ≤ n_bands − 1 ⇒ a and b share
-    at least one band (pigeonhole over the 64/n_bands-bit blocks).
-    Arithmetic band extraction — (hash >> 8·b) & 255 is sign-safe on
-    the two's-complement long — so the whole stage is codegen.
-    One shuffle, keyed on (band_idx, band_val): 8 narrow rows per
-    image, never the payload."""
+    members is the ref-sorted array of (ref, h, *carry) structs sharing
+    the band value. Guarantee: Hamming(a, b) ≤ n_bands − 1 ⇒ a and b
+    share at least one band (pigeonhole over the 64/n_bands-bit
+    blocks). Arithmetic band extraction — (hash >> 8·b) & 255 is
+    sign-safe on the two's-complement long — so the whole stage is
+    codegen. One shuffle, keyed on (band_idx, band_val): 8 narrow rows
+    per image, never the payload. `carry` names extra columns that
+    ride in each member, so a verify step can run in the expanded row
+    instead of joining back (video_dup_pairs carries each video's
+    frame signature)."""
     band_bits = 64 // n_bands
     mask = (1 << band_bits) - 1
     rows = hashes.filter(F.col(hash_col).isNotNull()).select(
         F.struct(
-            F.col(ref_col).alias("ref"), F.col(hash_col).alias("h")
+            F.col(ref_col).alias("ref"),
+            F.col(hash_col).alias("h"),
+            *[F.col(c) for c in carry],
         ).alias("m"),
         *[
             F.shiftrightunsigned(F.col(hash_col), band_bits * b)

@@ -270,51 +270,59 @@ def ivf_centroids(
     return centroids
 
 
+def _nearest_centroid_ids(vecs: list, cents: list[list[float]]):
+    """int32 Arrow array of argmin centroid ids over `vecs` (a batch's
+    to_pylist()), bit-exact with _argmin_centroid_expr (r9,
+    differential-tested): (x-c)² elementwise in float64 is the same
+    IEEE op sequence as the Column form's per-element math, np.cumsum
+    is SEQUENTIAL accumulation so its last column equals the
+    0.0-seeded left fold (0.0+t0 == t0), and np.argmin returns the
+    FIRST minimum — the array_position tie rule. A null vector, a
+    null element, or a length other than the centroids' gives a null
+    id, as the Column form's zip_with null padding does."""
+    import numpy as np
+    import pyarrow as pa
+
+    C = np.array(cents, dtype=np.float64)  # k × dims
+    dims = C.shape[1]
+    ok = np.array(
+        [v is not None and len(v) == dims and None not in v for v in vecs],
+        dtype=bool,
+    )
+    ids = np.zeros(len(vecs), dtype=np.int32)
+    if ok.any():
+        V = np.array([v for v, good in zip(vecs, ok) if good], dtype=np.float64)
+        # per centroid: elementwise (x-c)², then sequential cumsum —
+        # the exact left-fold sum; stack and first-min argmin
+        dists = np.stack(
+            [np.cumsum((V - C[j]) ** 2, axis=1)[:, -1] for j in range(len(C))],
+            axis=1,
+        )
+        ids[ok] = np.argmin(dists, axis=1)
+    return pa.array(ids, type=pa.int32(), mask=~ok)
+
+
 def _assign_ids_arrow(
     df: DataFrame,
     centroids: list[list[float]],
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """(id_col, centroid_id) via a NumPy argmin that replays
-    _argmin_centroid_expr BIT-EXACTLY (r9, differential-tested):
-    (x-c)² elementwise in float64 is the same IEEE op sequence as the
-    Column form's per-element math, np.cumsum is SEQUENTIAL
-    accumulation so its last column equals the 0.0-seeded left fold
-    (0.0+t0 == t0), and np.argmin returns the FIRST minimum — the
-    array_position tie rule. The higher-order Column form is
+    """(id_col, centroid_id) via the NumPy argmin of
+    _nearest_centroid_ids. The higher-order Column form is
     CodegenFallback (interpreted per element per centroid); this runs
     the same arithmetic as native batch loops."""
-    import numpy as np  # noqa: F401 — validated import for the closure
-
     base = df.select(id_col, F.col(vec_col).alias("v"))
     id_type = base.schema[id_col].dataType.simpleString()
     cents = [list(map(float, cv)) for cv in centroids]
 
     def assign(batches):
-        import numpy as np
         import pyarrow as pa
 
-        C = np.array(cents, dtype=np.float64)  # k × dims
         for batch in batches:
-            vecs = batch.column("v").to_pylist()
-            if not vecs:
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column(0), pa.array([], pa.int32())],
-                    names=[id_col, "centroid_id"],
-                )
-                continue
-            V = np.array(vecs, dtype=np.float64)  # n × dims
-            # per centroid: elementwise (x-c)², then sequential cumsum
-            # — the exact left-fold sum; stack and first-min argmin
-            dists = np.stack(
-                [np.cumsum((V - C[j]) ** 2, axis=1)[:, -1] for j in range(len(cents))],
-                axis=1,
-            )
-            ids = np.argmin(dists, axis=1).astype(np.int32)
+            ids = _nearest_centroid_ids(batch.column("v").to_pylist(), cents)
             yield pa.RecordBatch.from_arrays(
-                [batch.column(0), pa.array(ids)],
-                names=[id_col, "centroid_id"],
+                [batch.column(0), ids], names=[id_col, "centroid_id"]
             )
 
     return base.mapInArrow(
@@ -338,24 +346,10 @@ def with_centroid_ids_arrow(
     cents = [list(map(float, cv)) for cv in centroids]
 
     def assign(batches):
-        import numpy as np
         import pyarrow as pa
 
-        C = np.array(cents, dtype=np.float64)
         for batch in batches:
-            vecs = batch.column(vec_idx).to_pylist()
-            if vecs:
-                V = np.array(vecs, dtype=np.float64)
-                dists = np.stack(
-                    [
-                        np.cumsum((V - C[j]) ** 2, axis=1)[:, -1]
-                        for j in range(len(cents))
-                    ],
-                    axis=1,
-                )
-                ids = pa.array(np.argmin(dists, axis=1).astype(np.int32))
-            else:
-                ids = pa.array([], pa.int32())
+            ids = _nearest_centroid_ids(batch.column(vec_idx).to_pylist(), cents)
             yield pa.RecordBatch.from_arrays(
                 [batch.column(i) for i in range(batch.num_columns)] + [ids],
                 names=list(batch.schema.names) + ["centroid_id"],

@@ -15,19 +15,25 @@ one frame of. The ladder here:
                        dHash per frame. Scan-side mapInPandas: the
                        video bytes are read once and never shuffle;
                        output is ~32 bytes per frame.
-  video_dup_candidates frame hashes → the SAME 8-band Hamming-LSH as
-                       images (two frames within Hamming distance 7
-                       share a band, pigeonhole) → distinct candidate
-                       VIDEO pairs. Any video pair with ≥1 close
-                       frame pair becomes a candidate, so the final
-                       criterion below loses nothing (it requires ≥1
-                       aligned frame within max_frame_distance ≤ 7).
-  video_dup_pairs      candidates → join both sides' frame tables on
-                       sample_idx → exact per-frame Hamming distance
-                       IN the row → per-pair rollup: matched_frames
-                       (aligned frames within max_frame_distance),
-                       n_frames = max(frame counts), match_frac —
-                       keep pairs with match_frac ≥ min_match_frac.
+  video_dup_candidates frame hashes → ONE aggregate to a per-video
+                       signature (media_ref, sorted (sample_idx,
+                       fhash) list) → the SAME 8-band Hamming-LSH as
+                       images over the signature's frames (two frames
+                       within Hamming distance 7 share a band,
+                       pigeonhole), the signature carried in each
+                       bucket member → distinct candidate VIDEO
+                       pairs. Any video pair with ≥1 close frame pair
+                       becomes a candidate, so the final criterion
+                       below loses nothing (it requires ≥1 aligned
+                       frame within max_frame_distance ≤ 7).
+  video_dup_pairs      candidate pairs with both signatures in the
+                       row → exact aligned verify IN the row:
+                       matched_frames (aligned frames within
+                       max_frame_distance), n_frames = max(frame
+                       counts), match_frac — keep pairs with
+                       match_frac ≥ min_match_frac. No join back to
+                       the frame table, so the decode runs once per
+                       query.
   video_dup_clusters   connected components over the pairs (the
                        shared dedup_clusters pointer-jump loop),
                        keeper = min ref.
@@ -35,10 +41,12 @@ one frame of. The ladder here:
 Scale discipline (the imagededup.py contract): banding bounds
 candidate generation — no all-pairs video join anywhere; bucket caps
 quarantine degenerate buckets (a station ident shared by millions of
-clips); everything past the frame hash is narrow (ref, idx, long).
-The verify join fans out per MATCHED sample index of CANDIDATE pairs
-only — at crawl scale candidates are a vanishing fraction of the
-corpus and frames per video are bounded by max_frames. Reference
+clips); everything past the frame hash is narrow (ref, idx, long) —
+the carried signature is at most max_frames (idx, long) structs, so
+each bucket member stays O(max_frames) longs. The verify is an
+O(max_frames²) in-row loop per CANDIDATE pair, the image ladder's
+carry-the-hash shape: the plan is one linear chain from the decode,
+with no second branch that would re-run it. Reference
 parity: none — the reference treats media as opaque URLs; this is the
 LLM-pipeline brief (VERDICT r6 'Next round #3').
 """
@@ -143,20 +151,59 @@ def video_dup_candidates(
     every pair of videos with at least one cross-video frame pair
     within Hamming distance n_bands − 1 (banding pigeonhole), via the
     image ladder's hamming_band_buckets on the frame-hash column. A
-    video's OWN frames sharing a bucket (static shots) expand to
-    same-ref rows — filtered, never emitted. Buckets above
-    max_bucket_size are dropped before the O(m²) expansion
-    (video_oversize_buckets records them)."""
+    video's OWN frames sharing a bucket (static shots) never pair.
+    Buckets above max_bucket_size are dropped before the O(m²)
+    expansion (video_oversize_buckets records them)."""
+    return (
+        _candidate_signatures(frame_hashes, n_bands, max_bucket_size)
+        .select(F.col("p.a.ref").alias("ref_a"), F.col("p.b.ref").alias("ref_b"))
+        .distinct()
+    )
+
+
+def _candidate_signatures(
+    frame_hashes: DataFrame, n_bands: int, max_bucket_size: int | None
+) -> DataFrame:
+    """One row per (shared bucket, video pair): p = struct(a, b) of
+    (ref, frames) signatures, a.ref < b.ref, frames the video's sorted
+    (sample_idx, fhash) list. One aggregate builds the signatures;
+    their frames are banded with the signature carried in each bucket
+    member, so callers verify in-row instead of joining back to the
+    frame table. The cap counts one member per decoded frame — the
+    buckets video_oversize_buckets reports — and only then do the kept
+    buckets collapse to one member per video."""
     from .imagededup import hamming_band_buckets
 
+    sigs = (
+        frame_hashes.filter(F.col("frame_ok") == "ok")
+        .groupBy("media_ref")
+        .agg(
+            F.sort_array(
+                F.collect_list(F.struct("sample_idx", "fhash"))
+            ).alias("frames")
+        )
+    )
     grouped = hamming_band_buckets(
-        frame_hashes.filter(F.col("frame_ok") == "ok"),
+        sigs.select("media_ref", "frames", F.explode("frames.fhash").alias("fhash")),
         n_bands,
         ref_col="media_ref",
         hash_col="fhash",
+        carry=("frames",),
     )
     if max_bucket_size is not None:
         grouped = grouped.filter(F.size("members") <= max_bucket_size)
+    # one member per video: a static shot's repeated frames collapse,
+    # and refs come out strictly ascending (members sort on ref first),
+    # so every expanded pair is a cross-video pair; a bucket left with
+    # one video has no pair to expand
+    videos = grouped.select(
+        F.array_distinct(
+            F.transform(
+                "members",
+                lambda m: F.struct(m["ref"].alias("ref"), m["frames"].alias("frames")),
+            )
+        ).alias("members")
+    ).filter(F.size("members") >= 2)
     m = F.size("members")
     pair_structs = F.flatten(
         F.transform(
@@ -170,15 +217,7 @@ def video_dup_candidates(
             ),
         )
     )
-    return (
-        grouped.select(F.explode(pair_structs).alias("p"))
-        .select(
-            F.col("p.a.ref").alias("ref_a"),
-            F.col("p.b.ref").alias("ref_b"),
-        )
-        .filter(F.col("ref_a") != F.col("ref_b"))
-        .distinct()
-    )
+    return videos.select(F.explode(pair_structs).alias("p"))
 
 
 def video_oversize_buckets(
@@ -219,59 +258,47 @@ def video_dup_pairs(
     (6dp-rounded; IEEE division is exactly rounded, so the DuckDB
     oracle reproduces the frac bit-for-bit).
 
-    Plan: candidates from the banded search (no all-pairs), then the
-    verify join touches only candidate pairs' frame rows — two narrow
-    shuffles on ref, one rollup."""
-    ok = frame_hashes.filter(F.col("frame_ok") == "ok").select(
-        "media_ref", "sample_idx", "fhash"
-    )
-    counts = ok.groupBy("media_ref").agg(
-        F.count("*").cast("long").alias("n")
-    )
-    cands = video_dup_candidates(ok, n_bands, max_bucket_size)
-    fa = ok.select(
-        F.col("media_ref").alias("ref_a"),
-        F.col("sample_idx").alias("idx"),
-        F.col("fhash").alias("ha"),
-    )
-    fb = ok.select(
-        F.col("media_ref").alias("ref_b"),
-        F.col("sample_idx").alias("idx"),
-        F.col("fhash").alias("hb"),
-    )
-    matched = (
-        cands.join(fa, "ref_a")
-        .join(fb, ["ref_b", "idx"])
-        .groupBy("ref_a", "ref_b")
-        .agg(
-            F.sum(
-                F.when(
-                    F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-                    <= max_frame_distance,
-                    1,
-                ).otherwise(0)
+    Plan: the candidate pairs carry both videos' frame signatures
+    (_candidate_signatures), so the exact aligned verify runs IN the
+    expanded row — no join back to the frame table, hence one decode
+    per query however the plan is pruned. Three shuffles: signature,
+    band, distinct."""
+    fa, fb = F.col("p.a.frames"), F.col("p.b.frames")
+    # per aligned (equal sample_idx) frame pair within distance — the
+    # count an equi-join on (ref, sample_idx) would produce
+    matched = F.aggregate(
+        fa,
+        F.lit(0).cast("long"),
+        lambda acc, x: acc
+        + F.size(
+            F.filter(
+                fb,
+                lambda y: (y["sample_idx"] == x["sample_idx"])
+                & (
+                    F.bit_count(x["fhash"].bitwiseXOR(y["fhash"]))
+                    <= max_frame_distance
+                ),
             )
-            .cast("long")
-            .alias("matched_frames")
-        )
+        ),
     )
-    ca = counts.select(F.col("media_ref").alias("ref_a"), F.col("n").alias("na"))
-    cb = counts.select(F.col("media_ref").alias("ref_b"), F.col("n").alias("nb"))
     return (
-        matched.join(ca, "ref_a")
-        .join(cb, "ref_b")
+        _candidate_signatures(frame_hashes, n_bands, max_bucket_size)
         .select(
-            "ref_a",
-            "ref_b",
-            "matched_frames",
-            F.greatest("na", "nb").alias("n_frames"),
+            F.col("p.a.ref").alias("ref_a"),
+            F.col("p.b.ref").alias("ref_b"),
+            matched.alias("matched_frames"),
+            F.greatest(F.size(fa), F.size(fb)).cast("long").alias("n_frames"),
+        )
+        .withColumn(
+            "match_frac",
             F.round(
                 F.col("matched_frames").cast("double")
-                / F.greatest("na", "nb").cast("double"),
+                / F.col("n_frames").cast("double"),
                 6,
-            ).alias("match_frac"),
+            ),
         )
         .filter(F.col("match_frac") >= min_match_frac)
+        .distinct()
     )
 
 

@@ -19,6 +19,14 @@ def planted(spark):
     return near, exact
 
 
+def test_planted_dups_keep_input_partitions(spark):
+    # clones are emitted in-row, not unioned on: every Python stage
+    # over the planted table runs one task per input partition
+    docs = em._docs(spark, SF_DIR)
+    planted = em._docs_with_planted_dups(spark, SF_DIR)
+    assert planted.rdd.getNumPartitions() == docs.rdd.getNumPartitions()
+
+
 def test_exact_dedup_finds_all_planted_clones(spark, planted):
     _, exact = planted
     rows = em.q_dedup_exact(spark, SF_DIR).collect()

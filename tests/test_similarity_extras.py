@@ -109,3 +109,49 @@ def test_quantize_roundtrip_error_bound(spark):
         ).alias("worst_excess")
     )
     assert joined.collect()[0]["worst_excess"] <= 1e-6
+
+
+def test_arrow_assign_null_and_wrong_length_vectors_get_null_id(spark):
+    """A null vector, a null element, or a length other than the
+    centroids' assigns a null centroid_id on both Arrow paths — the
+    Column form's zip_with null padding — and never fails the task;
+    well-formed rows keep the Column form's id."""
+    from claude_readability_hook_spark.operators.similarity import (
+        _argmin_centroid_expr,
+        _assign_ids_arrow,
+        with_centroid_ids_arrow,
+    )
+
+    cents = ivf_centroids(_emb(spark), k=4, iterations=1, dims=64)
+    good = [float(v) for v in cents[2]]
+    bad_ids = {1, 2, 3, 4, 5}
+    df = spark.createDataFrame(
+        [
+            (0, good),
+            (1, None),
+            (2, good[:32]),
+            (3, good + [0.0]),
+            (4, good[:63] + [None]),
+            (5, []),
+            (6, [v + 0.01 for v in cents[0]]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    col_form = {
+        r["vec_id"]: r["cid"]
+        for r in df.select(
+            "vec_id", _argmin_centroid_expr(F.col("embedding"), cents).alias("cid")
+        ).collect()
+    }
+    assert {i for i, c in col_form.items() if c is None} == bad_ids
+    arrow = {
+        r["vec_id"]: r["centroid_id"]
+        for r in _assign_ids_arrow(df, cents, "embedding", "vec_id").collect()
+    }
+    passthrough = {
+        r["vec_id"]: r["centroid_id"]
+        for r in with_centroid_ids_arrow(df, cents, "embedding").collect()
+    }
+    assert arrow == col_form
+    assert passthrough == col_form
+    assert arrow[0] == 2 and arrow[6] == 0

@@ -102,6 +102,24 @@ def test_planted_twin_recovered_and_prefix_not_full_score(spark):
     assert twin_rows[0].n_frames == twin_rows[0].matched_frames
 
 
+def test_pairs_plan_decodes_once(spark):
+    # the pairs plan is one chain from the decode: signature aggregate,
+    # banding with the signature carried, in-row verify — no branch
+    # joins back to the frame table and re-runs the Python decode
+    base = synthesize_media_table(
+        spark, [f"va:{i}" for i in range(4)], real_png_mp4=True
+    )
+    twin = synthesize_media_table(
+        spark, [f"av:{i}" for i in range(4)], real_png_mp4=True, video_twin=True
+    )
+    pairs = video_dup_pairs(video_frame_hashes(base.unionByName(twin)))
+    assert len(pairs.collect()) == 4
+    # with AQE on, the top-level string also prints the initial plan;
+    # the inner executedPlan is the final one that ran
+    final = pairs._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert final.count("MapInPandas") == 1
+
+
 def test_prefix_clip_normalized_by_longer_video(spark):
     # same content, one video carries 3 extra frames: matched_frames
     # = 3 aligned, n_frames = 6 ⇒ frac 0.5 (kept at the default
@@ -128,6 +146,7 @@ def test_bucket_cap_quarantines_degenerate_bucket(spark):
     )
     fh = video_frame_hashes(media)
     assert video_dup_candidates(fh, max_bucket_size=5).count() == 0
+    assert video_dup_pairs(fh, max_bucket_size=5).count() == 0
     over = video_oversize_buckets(fh, max_bucket_size=5)
     assert over.count() > 0
     assert over.agg(F.max("n_refs")).first()[0] >= 12

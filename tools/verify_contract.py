@@ -6,6 +6,7 @@ Usage (run from the repo root so executors can import the package):
     python tools/verify_contract.py               # all pairs
     python tools/verify_contract.py q1 q2 ...     # a subset
     VERIFY_SF=/root/testdata/sf0.1 python tools/verify_contract.py
+    SPARK_GRAFT_CPUS=4 python tools/verify_contract.py  # local[4], 4 shuffle partitions (default 8)
 """
 import math, os, sys, time
 import os as _os
@@ -15,8 +16,9 @@ from pyspark.sql import SparkSession
 import __spark_entry__ as e
 
 SF = os.environ.get("VERIFY_SF", "/root/testdata/sf0.01")
-spark = (SparkSession.builder.master("local[8]")
-         .config("spark.sql.shuffle.partitions", "8")
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+spark = (SparkSession.builder.master(f"local[{CPUS}]")
+         .config("spark.sql.shuffle.partitions", str(CPUS))
          .config("spark.ui.enabled", "false")
          .config("spark.driver.memory", "8g")
          .getOrCreate())

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from .._pyworker import python_stage
 from .imagededup import image_dup_pairs
 
 AUDIO_FP_DIM = 64  # envelope windows == fingerprint bits
@@ -122,7 +123,7 @@ def audio_fingerprints(media: DataFrame) -> DataFrame:
     return (
         media.filter(F.col("modality") == "audio")
         .select("media_ref", "payload")
-        .mapInPandas(fp_batch, schema=AUDIO_FP)
+        .mapInPandas(python_stage(fp_batch), schema=AUDIO_FP)
     )
 
 

@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .._pyworker import python_stage
+
 BOILER_NGRAM = 5
 BOILER_MIN_DOCS = 4  # sources smaller than this can't evidence a template
 BOILER_FRAC_MICRO = 500_000  # n-gram is boilerplate at >= 50% doc-frequency
@@ -107,7 +109,7 @@ def _doc_shingle_hashes(
             )
 
     return base.mapInArrow(
-        hash_batches,
+        python_stage(hash_batches),
         schema=f"doc_id {id_type}, source string, hs array<long>",
     )
 

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .._pyworker import python_stage
 from .textcommon import tokens_expr
 from .textstats import vocabulary
 
@@ -434,7 +435,7 @@ def trie_encode_word_counts(
                 }
             )
 
-    return distinct_words.mapInPandas(enc, "w string, n_sym long")
+    return distinct_words.mapInPandas(python_stage(enc), "w string, n_sym long")
 
 
 def trie_encode_word_symbol_arrays(
@@ -464,7 +465,7 @@ def trie_encode_word_symbol_arrays(
                 }
             )
 
-    return distinct_words.mapInPandas(enc, "w string, syms array<string>")
+    return distinct_words.mapInPandas(python_stage(enc), "w string, syms array<string>")
 
 
 def save_bpe_artifact(
@@ -783,7 +784,7 @@ def trie_encode_byte_counts(
                 }
             )
 
-    return distinct_pretokens.mapInPandas(enc, "pt string, n_sym long")
+    return distinct_pretokens.mapInPandas(python_stage(enc), "pt string, n_sym long")
 
 
 def byte_bpe_encode_counts_trie(

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .._pyworker import python_stage
 from .textcommon import norm_text_expr
 
 
@@ -118,7 +119,7 @@ def doc_shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame
             )
 
     return base.mapInArrow(
-        sh_batches, schema=f"doc_id {id_type}, shingles array<string>"
+        python_stage(sh_batches), schema=f"doc_id {id_type}, shingles array<string>"
     )
 
 
@@ -174,7 +175,7 @@ def _expand_pairs(grouped: DataFrame, ids_col: str = "ids") -> DataFrame:
             )
 
     return buckets.mapInArrow(
-        expand, schema=f"doc_a {elem_type}, doc_b {elem_type}"
+        python_stage(expand), schema=f"doc_a {elem_type}, doc_b {elem_type}"
     ).distinct()
 
 
@@ -244,7 +245,7 @@ def minhash_signature(
     schema = ", ".join(
         [f"doc_id {id_type}"] + [f"s{i} long" for i in range(num_hashes)]
     )
-    return base.mapInArrow(sig_batches, schema=schema)
+    return base.mapInArrow(python_stage(sig_batches), schema=schema)
 
 
 def minhash_band_buckets(
@@ -515,7 +516,7 @@ def simhash(df: DataFrame, bits: int = 16, text_col: str = "text") -> DataFrame:
             )
 
     return base.mapInArrow(
-        sim_batches, schema=f"doc_id {id_type}, simhash long"
+        python_stage(sim_batches), schema=f"doc_id {id_type}, simhash long"
     )
 
 
@@ -577,7 +578,7 @@ def ngram_jaccard_pairs(
 
     shared = (
         grouped.select("ks")
-        .mapInArrow(expand, schema="ka long, kb long")
+        .mapInArrow(python_stage(expand), schema="ka long, kb long")
         .groupBy("ka", "kb")
         .agg(F.count("*").alias("shared"))
     )

@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .._pyworker import python_stage
 from ..config import DEFAULT, EngineConfig
 from ..core.extractor import extract_document
 from ..schemas import EXTRACTED_WITH_METRICS
@@ -167,8 +168,12 @@ def extract_spans(
     for differential testing)."""
     narrow = df.select("doc_id", "spans")
     if engine == "arrow":
-        return narrow.mapInArrow(make_extract_arrow_fn(cfg), schema=EXTRACTED_WITH_METRICS)
-    return narrow.mapInPandas(make_extract_fn(cfg), schema=EXTRACTED_WITH_METRICS)
+        return narrow.mapInArrow(
+            python_stage(make_extract_arrow_fn(cfg)), schema=EXTRACTED_WITH_METRICS
+        )
+    return narrow.mapInPandas(
+        python_stage(make_extract_fn(cfg)), schema=EXTRACTED_WITH_METRICS
+    )
 
 
 def strip_metrics(df: DataFrame) -> DataFrame:

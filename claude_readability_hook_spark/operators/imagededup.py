@@ -49,6 +49,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .._pyworker import python_stage
+
 IMAGE_HASH = StructType(
     [
         StructField("media_ref", StringType(), False),
@@ -114,7 +116,7 @@ def image_dhash(media: DataFrame) -> DataFrame:
     return (
         media.filter(F.col("modality") == "image")
         .select("media_ref", "payload")
-        .mapInPandas(hash_batch, schema=IMAGE_HASH)
+        .mapInPandas(python_stage(hash_batch), schema=IMAGE_HASH)
     )
 
 
@@ -168,7 +170,7 @@ def image_pdct(media: DataFrame) -> DataFrame:
     return (
         media.filter(F.col("modality") == "image")
         .select("media_ref", "payload")
-        .mapInPandas(hash_batch, schema=IMAGE_PDCT)
+        .mapInPandas(python_stage(hash_batch), schema=IMAGE_PDCT)
     )
 
 
@@ -557,7 +559,7 @@ def canonicalize_media_refs(
                 ]
                 yield pdf
 
-        return df.mapInPandas(rewrite, schema=schema)
+        return df.mapInPandas(python_stage(rewrite), schema=schema)
 
     span_type = df.schema["spans"].dataType
     exploded = df.select("doc_id", F.posexplode("spans").alias("pos", "s"))

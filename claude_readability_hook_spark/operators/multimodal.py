@@ -43,6 +43,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .._pyworker import python_stage
+from ..schemas import local_frame
+
 MEDIA = StructType(
     [
         StructField("media_ref", StringType(), False),
@@ -143,7 +146,7 @@ def extract_media_features(media: DataFrame) -> DataFrame:
     narrow = media.select("media_ref", "modality", "payload")
     # Binary payloads are the partition-size hazard: bound rows/batch so
     # an Arrow batch of payloads stays ≈ tens of MB.
-    return narrow.mapInPandas(featurize, schema=MEDIA_FEATURES)
+    return narrow.mapInPandas(python_stage(featurize), schema=MEDIA_FEATURES)
 
 
 AUDIO_STATS = StructType(
@@ -202,7 +205,9 @@ def audio_stats(media: DataFrame) -> DataFrame:
                 records.append(rec)
             yield pd.DataFrame.from_records(records)
 
-    return media.select("media_ref", "payload").mapInPandas(stats, schema=AUDIO_STATS)
+    return media.select("media_ref", "payload").mapInPandas(
+        python_stage(stats), schema=AUDIO_STATS
+    )
 
 
 RESIZED = StructType(
@@ -276,7 +281,9 @@ def resize_media(media: DataFrame, out_w: int = 16, out_h: int = 16) -> DataFram
                     )
             yield pd.DataFrame.from_records(records)
 
-    return media.select("media_ref", "payload").mapInPandas(do_resize, schema=RESIZED)
+    return media.select("media_ref", "payload").mapInPandas(
+        python_stage(do_resize), schema=RESIZED
+    )
 
 
 VIDEO_SAMPLES = StructType(
@@ -357,7 +364,7 @@ def demux_video_samples(media: DataFrame, sync_only: bool = False) -> DataFrame:
     return (
         media.filter(F.col("modality") == "video")
         .select("media_ref", "payload")
-        .mapInPandas(demux, schema=VIDEO_SAMPLES)
+        .mapInPandas(python_stage(demux), schema=VIDEO_SAMPLES)
     )
 
 
@@ -464,7 +471,7 @@ def extract_video_frames(
     return (
         media.filter(F.col("modality") == "video")
         .select("media_ref", "payload")
-        .mapInPandas(decode, schema=VIDEO_FRAMES)
+        .mapInPandas(python_stage(decode), schema=VIDEO_FRAMES)
     )
 
 
@@ -885,4 +892,4 @@ def synthesize_media_table(
                 "mime": mime,
             }
         )
-    return spark.createDataFrame(rows, schema=MEDIA)
+    return local_frame(spark, rows, MEDIA)

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .._pyworker import python_stage
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -326,7 +328,7 @@ def _assign_ids_arrow(
             )
 
     return base.mapInArrow(
-        assign, schema=f"{id_col} {id_type}, centroid_id int"
+        python_stage(assign), schema=f"{id_col} {id_type}, centroid_id int"
     )
 
 
@@ -355,7 +357,7 @@ def with_centroid_ids_arrow(
                 names=list(batch.schema.names) + ["centroid_id"],
             )
 
-    return df.mapInArrow(assign, schema=f"{schema}, centroid_id int")
+    return df.mapInArrow(python_stage(assign), schema=f"{schema}, centroid_id int")
 
 
 def ivf_assign(

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .._pyworker import python_stage
 from .textcommon import tokens_expr
 
 SEG_TOKENS = 10
@@ -158,7 +159,7 @@ def _doc_segments(
             )
 
     return base.mapInArrow(
-        seg_batches, schema=f"doc_id {id_type}, segs array<string>"
+        python_stage(seg_batches), schema=f"doc_id {id_type}, segs array<string>"
     )
 
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .._pyworker import python_stage
 from .textcommon import norm_text_expr, tokens_expr
 
 # Tiny per-language stopword sets for the n-gram/stopword heuristic.
@@ -662,7 +663,7 @@ def winnowing_fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
             )
 
     return base.mapInArrow(
-        fps_batches, schema=f"doc_id {id_type}, fp long"
+        python_stage(fps_batches), schema=f"doc_id {id_type}, fp long"
     )
 
 

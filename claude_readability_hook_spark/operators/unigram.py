@@ -46,6 +46,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .._pyworker import python_stage
+
 MAX_PIECE_LEN = 6
 UNK_COST_MICRO = 10**9
 _MASK_CAP = 60
@@ -203,7 +205,7 @@ def _segment_pretokens(
             )
 
     return pretokens.mapInPandas(
-        seg, schema="pretoken string, n long, pieces array<string>"
+        python_stage(seg), schema="pretoken string, n long, pieces array<string>"
     )
 
 

@@ -65,6 +65,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .._pyworker import python_stage
+
 VIDEO_FRAME_HASH = StructType(
     [
         StructField("media_ref", StringType(), False),
@@ -138,7 +140,7 @@ def video_frame_hashes(media: DataFrame, max_frames: int = 8) -> DataFrame:
     return (
         media.filter(F.col("modality") == "video")
         .select("media_ref", "payload")
-        .mapInPandas(decode, schema=VIDEO_FRAME_HASH)
+        .mapInPandas(python_stage(decode), schema=VIDEO_FRAME_HASH)
     )
 
 

@@ -13,6 +13,7 @@ Input table shape is authoritative from BASELINE.json `input_hint`:
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -210,3 +211,16 @@ def _listing(item: StructType) -> StructType:
 
 REDDIT_POSTS_LISTING = _listing(REDDIT_POST)
 REDDIT_COMMENTS_LISTING = _listing(REDDIT_COMMENT)
+
+
+def local_frame(
+    spark: SparkSession, rows: list[dict], schema: StructType
+) -> DataFrame:
+    """Driver-local rows as a DataFrame built from one Arrow table. Its
+    scan is a JVM LocalTableScan; `createDataFrame(rows, schema)` would
+    instead start a Python stage on every scan just to re-pickle them."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema=schema)

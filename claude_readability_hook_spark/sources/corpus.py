@@ -25,7 +25,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..schemas import DOCUMENTS
+from .._pyworker import python_stage
+from ..schemas import DOCUMENTS, local_frame
 
 _NAV_HTML = (
     '<nav class="nav-menu"><ul>'
@@ -270,7 +271,7 @@ def corpus_from_flat(spark: SparkSession, sf_dir: str, repartition: int | None =
                 )
             yield pd.DataFrame.from_records(rows)
 
-    return flat.mapInPandas(gen, schema=DOCUMENTS)
+    return flat.mapInPandas(python_stage(gen), schema=DOCUMENTS)
 
 
 # ---------------------------------------------------------------------------
@@ -546,4 +547,4 @@ def fixture_rows() -> list[dict]:
 
 
 def fixtures_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(fixture_rows(), schema=DOCUMENTS)
+    return local_frame(spark, fixture_rows(), DOCUMENTS)

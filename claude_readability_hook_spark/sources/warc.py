@@ -32,6 +32,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .._pyworker import python_stage
+
 _CRLF2 = b"\r\n\r\n"
 
 
@@ -210,7 +212,7 @@ def _warc_like_to_documents(
 
     files = spark.read.format("binaryFile").load(path)
     return files.select("path", "content").mapInPandas(
-        parse,
+        python_stage(parse),
         schema="doc_id string, url string, source string, text string, _warc_error string",
     )
 
@@ -289,7 +291,7 @@ def warc_to_documents_sniffed(spark: SparkSession, path: str) -> DataFrame:
 
     files = spark.read.format("binaryFile").load(path).select("path", "content")
     return files.mapInPandas(
-        parse,
+        python_stage(parse),
         schema=(
             "doc_id string, url string, source string, "
             "text string, charset string, _warc_error string"

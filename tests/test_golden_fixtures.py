@@ -7,13 +7,26 @@ from __future__ import annotations
 import pytest
 
 from claude_readability_hook_spark.operators.extract import extract_spans, strip_metrics
-from claude_readability_hook_spark.sources.corpus import fixtures_df
+from claude_readability_hook_spark.schemas import DOCUMENTS
+from claude_readability_hook_spark.sources.corpus import fixture_rows, fixtures_df
 
 
 @pytest.fixture(scope="module")
 def rows(spark):
     df = strip_metrics(extract_spans(fixtures_df(spark)))
     return {r["doc_id"]: r.asDict(recursive=True) for r in df.collect()}
+
+
+def test_fixture_frame_has_the_list_path_rows(spark):
+    # the Arrow-built fixture frame is a JVM scan with the same schema,
+    # partitions and rows as createDataFrame over the row list
+    arrow = fixtures_df(spark)
+    listed = spark.createDataFrame(fixture_rows(), schema=DOCUMENTS)
+    plan = arrow._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert arrow.schema == listed.schema == DOCUMENTS
+    assert arrow.rdd.getNumPartitions() == listed.rdd.getNumPartitions()
+    assert sorted(arrow.collect()) == sorted(listed.collect())
 
 
 def _spans(row):

@@ -1,9 +1,9 @@
-"""The extraction operator: Arrow-batched mapInPandas over span rows.
+"""The extraction operator: mapInArrow over span rows.
 
-One Python invocation per Arrow batch; each batch is a pandas
-DataFrame of documents whose spans arrive as numpy object arrays of
-Row-like dicts. All per-document logic lives in core/ (pure Python);
-this module is only the Spark plumbing: schema contract, batching,
+One Python invocation per Arrow record batch; each batch converts to
+plain dicts through pyarrow's C path (spans arrive as lists of
+dicts). All per-document logic lives in core/ (pure Python); this
+module is only the Spark plumbing: schema contract, batching,
 row-level error isolation, and per-partition metrics emission.
 
 Row-level error isolation is load-bearing at scale (SURVEY §4): a
@@ -15,9 +15,7 @@ the analog of the reference's per-request try/except
 from __future__ import annotations
 
 import time
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -25,50 +23,6 @@ from .._pyworker import python_stage
 from ..config import DEFAULT, EngineConfig
 from ..core.extractor import extract_document
 from ..schemas import EXTRACTED_WITH_METRICS
-
-
-def _spans_to_records(spans) -> list[dict]:
-    """Normalize Arrow-deserialized span structs to plain dicts."""
-    out = []
-    for s in spans:
-        if isinstance(s, dict):
-            out.append(s)
-        else:  # pyspark Row
-            out.append(
-                {
-                    "kind": s["kind"],
-                    "text": s["text"],
-                    "media_ref": s["media_ref"],
-                    "offset": s["offset"],
-                }
-            )
-    return out
-
-
-def make_extract_fn(cfg: EngineConfig = DEFAULT):
-    """Build the mapInPandas function (picklable closure over cfg)."""
-
-    def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        partition_id = ctx.partitionId() if ctx is not None else -1
-
-        for batch in batches:
-            t0 = time.monotonic()
-            records = [
-                _extract_one(str(doc_id), _spans_to_records(spans), partition_id, cfg)
-                for doc_id, spans in zip(batch["doc_id"], batch["spans"])
-            ]
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            # amortize batch wall time over rows so the lineage rollup
-            # can sum it back without double counting
-            n = max(len(records), 1)
-            for i, r in enumerate(records):
-                r["udf_wall_ms"] = wall_ms // n + (1 if i < wall_ms % n else 0)
-            yield pd.DataFrame.from_records(records)
-
-    return extract_batches
 
 
 def _extract_one(doc_id: str, span_records: list[dict], partition_id: int, cfg) -> dict:
@@ -102,11 +56,11 @@ def _extract_one(doc_id: str, span_records: list[dict], partition_id: int, cfg) 
 
 
 def make_extract_arrow_fn(cfg: EngineConfig = DEFAULT):
-    """mapInArrow variant: RecordBatch → list-of-dicts → RecordBatch,
-    all through pyarrow's C conversion paths. The pandas route
-    materializes every nested span struct as Python objects through
-    pandas' block manager twice (in and out); arrow→pylist→arrow skips
-    that entirely (measured ~30% of UDF wall)."""
+    """The mapInArrow body: RecordBatch → list-of-dicts → RecordBatch,
+    all through pyarrow's C conversion paths. A mapInPandas route
+    would materialize every nested span struct as Python objects
+    through pandas' block manager twice (in and out); arrow→pylist→
+    arrow skips that (measured ~30% of UDF wall)."""
 
     def extract_batches(batches):
         import pyarrow as pa
@@ -156,23 +110,14 @@ def _arrow_output_schema():
     return to_arrow_schema(EXTRACTED_WITH_METRICS)
 
 
-def extract_spans(
-    df: DataFrame, cfg: EngineConfig = DEFAULT, engine: str = "arrow"
-) -> DataFrame:
+def extract_spans(df: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
     """documents(doc_id, spans, ...) → EXTRACTED_WITH_METRICS rows.
 
     Selects only (doc_id, spans) first so Catalyst prunes every other
     column out of the scan — the batch analog of the reference's
-    renderer resource-blocking (SURVEY §4). engine='arrow' (default)
-    uses mapInArrow; 'pandas' keeps the mapInPandas route (retained
-    for differential testing)."""
-    narrow = df.select("doc_id", "spans")
-    if engine == "arrow":
-        return narrow.mapInArrow(
-            python_stage(make_extract_arrow_fn(cfg)), schema=EXTRACTED_WITH_METRICS
-        )
-    return narrow.mapInPandas(
-        python_stage(make_extract_fn(cfg)), schema=EXTRACTED_WITH_METRICS
+    renderer resource-blocking (SURVEY §4)."""
+    return df.select("doc_id", "spans").mapInArrow(
+        python_stage(make_extract_arrow_fn(cfg)), schema=EXTRACTED_WITH_METRICS
     )
 
 

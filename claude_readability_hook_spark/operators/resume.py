@@ -60,14 +60,16 @@ def remaining_documents(
 
     The done-side is projected to doc_id only (after the cheap
     staleness filters, which prune at the scan) before the join so the
-    anti-join ships one string column. AQE picks broadcast vs
-    sort-merge from the actual size at runtime — at 10^12 docs the done
-    set is NOT broadcastable and must sort-merge on doc_id."""
+    anti-join ships one string column. It is not deduplicated: a
+    left_anti join's result does not depend on how often a key repeats
+    on the right, so a distinct() would only add a shuffle stage. AQE
+    picks broadcast vs sort-merge from the actual size at runtime — at
+    10^12 docs the done set is NOT broadcastable and must sort-merge on
+    doc_id."""
     if done is None:
         return src
     fresh = fresh_extractions(done, engine_version, max_age_hours, now)
-    done_ids = fresh.select("doc_id").distinct()
-    return src.join(done_ids, on="doc_id", how="left_anti")
+    return src.join(fresh.select("doc_id"), on="doc_id", how="left_anti")
 
 
 def latest_extractions(done: DataFrame) -> DataFrame:
@@ -104,6 +106,6 @@ def cache_hits(
     'cached=true' responses of the reference), for metrics parity:
     hits ∪ remaining == src, disjoint."""
     fresh = fresh_extractions(done, engine_version, max_age_hours, now)
-    return src.join(fresh.select("doc_id").distinct(), on="doc_id", how="left_semi").withColumn(
+    return src.join(fresh.select("doc_id"), on="doc_id", how="left_semi").withColumn(
         "cached", F.lit(True)
     )

@@ -141,11 +141,16 @@ def hot_key_salted_repartition(
     return salted.repartition(num_partitions, F.col(key_col), F.col("salt"))
 
 
-def partitions_for(df: DataFrame, cfg: EngineConfig = DEFAULT, minimum: int = 8) -> int:
+def partitions_for_bytes(total: int, cfg: EngineConfig = DEFAULT, minimum: int = 8) -> int:
     """Size the partition count so a partition ≈ target_partition_bytes
-    of HTML (one well-sized Arrow batch, SURVEY §4 'bounded concurrency').
+    of HTML (one well-sized Arrow batch, SURVEY §4 'bounded concurrency')."""
+    return max(minimum, int(total // cfg.target_partition_bytes) + 1)
+
+
+def partitions_for(df: DataFrame, cfg: EngineConfig = DEFAULT, minimum: int = 8) -> int:
+    """partitions_for_bytes over df's total n_bytes.
 
     Driver-side single-row agg — cheap (sum pushes down columnar)."""
     df = with_doc_bytes(df)
     total = df.agg(F.sum("n_bytes").alias("b")).collect()[0]["b"] or 0
-    return max(minimum, int(total // cfg.target_partition_bytes) + 1)
+    return partitions_for_bytes(total, cfg, minimum)

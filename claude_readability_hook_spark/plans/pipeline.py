@@ -2,9 +2,9 @@
 
   read span table
     → resume anti-join against committed output       (O5/J1)
-    → validation / routing / SSR-metric column exprs  (O1-O4, O14; codegen)
+    → byte size + oversize flag column exprs          (S2; codegen)
     → byte-salted repartition                         (skew, §4.1)
-    → mapInPandas extraction with in-UDF fallback     (F4-F7, §2.12)
+    → mapInArrow extraction with in-UDF fallback      (F4-F7, §2.12)
     → output append + per-partition lineage append    (S7/S8)
 
 The reference's two HTTP hops and thread pool (§3.1 boundaries)
@@ -14,17 +14,18 @@ collapse into Spark's executor↔Python-worker Arrow channels.
 from __future__ import annotations
 
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+from functools import cached_property
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, EngineConfig
-from ..functions import columns as C
 from ..operators.extract import extract_spans, strip_metrics
 from ..operators.lineage import lineage_rollup
 from ..operators.resume import remaining_documents
-from ..operators.skew import partitions_for, salted_repartition, with_doc_bytes
+from ..operators.skew import partitions_for_bytes, salted_repartition, with_doc_bytes
 from ..sources.catalog import TableCatalog
 
 EXTRACTED_TABLE = "extracted"
@@ -33,20 +34,13 @@ QUARANTINE_TABLE = "_quarantine"
 
 
 def validated(df: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
-    """Attach the cheap Column-expr predicates BEFORE the expensive UDF
-    (Catalyst can't reorder across a UDF black box — SURVEY §4)."""
-    out = with_doc_bytes(df)
-    if "url" in df.columns:
-        out = (
-            out.withColumn("url", C.transform_url_expr(F.col("url")))
-            .withColumn("valid_url", C.is_valid_url_expr(F.col("url")))
-        )
-    if "host" in df.columns:
-        out = out.withColumn("host_private", C.host_is_private_expr(F.col("host"))).withColumn(
-            "route_tag", C.route_tag_expr(F.col("host"))
-        )
+    """Attach n_bytes and the oversize flag BEFORE the expensive UDF
+    (Catalyst can't reorder across a UDF black box — SURVEY §4). Only
+    columns the run reads are built: extraction prunes to (doc_id,
+    spans), so URL/host routing exprs here would cost driver-side
+    expression building and never reach the plan."""
     # Oversize docs route to quarantine instead of killing tasks (S2).
-    return out.withColumn("oversize", F.col("n_bytes") > cfg.max_html_bytes)
+    return with_doc_bytes(df).withColumn("oversize", F.col("n_bytes") > cfg.max_html_bytes)
 
 
 def _parse_bytes_conf(v: str) -> int:
@@ -126,13 +120,25 @@ def _estimated_scan_partitions(spark: SparkSession, df: DataFrame) -> int | None
 
 @dataclass
 class RunResult:
+    """What one run_extraction call produced.
+
+    lineage: this run's per-partition rollup, computed from the run's
+    own materialized output (the localCheckpoint) — the same rows the
+    run appended to _lineage, without reading the table back.
+
+    extracted: without a catalog, this run's output. With a catalog,
+    the raw committed table, read (and its files listed) on first
+    access — after a staleness-driven re-extraction it contains
+    superseded rows too; operators.resume.latest_extractions (or
+    catalog.merge_latest) resolves to one row per doc."""
+
     run_id: str
-    # With a catalog, `extracted` is the raw committed table — after a
-    # staleness-driven re-extraction it contains superseded rows too;
-    # operators.resume.latest_extractions (or catalog.merge_latest)
-    # resolves to one row per doc.
-    extracted: DataFrame
     lineage: DataFrame
+    load_extracted: Callable[[], DataFrame] = field(repr=False)
+
+    @cached_property
+    def extracted(self) -> DataFrame:
+        return self.load_extracted()
 
 
 def run_extraction(
@@ -154,7 +160,11 @@ def run_extraction(
     I/O for nothing (measured: the shuffle cost 2-4× the extraction
     compute). The salted shuffle earns its cost only when the input
     arrives in few/skewed partitions (a handful of giant files, or a
-    filter that gutted most partitions)."""
+    filter that gutted most partitions).
+
+    With a catalog, oversize documents (cfg.max_html_bytes) are
+    recorded in _quarantine; a run that quarantines nothing writes no
+    _quarantine files, so the table may not exist."""
     run_id = run_id or uuid.uuid4().hex[:12]
 
     df = validated(src, cfg)
@@ -169,10 +179,22 @@ def run_extraction(
         df, done, engine_version=cfg.engine_version, max_age_hours=cfg.reextract_ttl_hours
     )
 
+    # One aggregate over the anti-join sizes the run AND tells whether
+    # anything needs quarantining, so the quarantine append (which
+    # replays the anti-join) runs only when it has rows to write.
+    n_oversize = 0
+    nparts = num_partitions
+    if catalog is not None or nparts is None:
+        sizing = todo.agg(
+            F.sum(F.when(~F.col("oversize"), F.col("n_bytes"))).alias("b"),
+            F.count(F.when(F.col("oversize"), 1)).alias("n_oversize"),
+        ).collect()[0]
+        n_oversize = sizing["n_oversize"]
+        nparts = nparts or partitions_for_bytes(sizing["b"] or 0, cfg)
+
     quarantined = todo.filter(F.col("oversize"))
     todo = todo.filter(~F.col("oversize"))
 
-    nparts = num_partitions or partitions_for(todo, cfg)
     # Logical-plan partition estimate (no .rdd conversion — that would
     # sidestep AQE's view of the plan and force an analysis round-trip
     # on the driver): leaf scan partitions from the file sizes. The
@@ -202,23 +224,22 @@ def run_extraction(
         # the materialized rows have no file-scan dependency to refresh,
         # and extraction runs exactly once per run.
         with_metrics = with_metrics.localCheckpoint(eager=True)
-        catalog.append(strip_metrics(with_metrics), EXTRACTED_TABLE)
-        catalog.append(lineage_rollup(with_metrics, run_id), LINEAGE_TABLE)
-        extracted = catalog.read(EXTRACTED_TABLE)
-        lineage = catalog.read(LINEAGE_TABLE).filter(F.col("run_id") == run_id)
-        # Oversize docs (S2 byte cap) go to a quarantine table instead of
-        # killing tasks — metadata only, never the giant payload.
-        catalog.append(
-            quarantined.select(
-                F.lit(run_id).alias("run_id"),
-                "doc_id",
-                "n_bytes",
-                F.lit("oversize").alias("reason"),
-            ),
-            QUARANTINE_TABLE,
-        )
-    else:
         lineage = lineage_rollup(with_metrics, run_id)
-        extracted = strip_metrics(with_metrics)
+        catalog.append(strip_metrics(with_metrics), EXTRACTED_TABLE)
+        catalog.append(lineage, LINEAGE_TABLE)
+        if n_oversize > 0:
+            # Oversize docs (S2 byte cap) go to a quarantine table instead
+            # of killing tasks — metadata only, never the giant payload.
+            catalog.append(
+                quarantined.select(
+                    F.lit(run_id).alias("run_id"),
+                    "doc_id",
+                    "n_bytes",
+                    F.lit("oversize").alias("reason"),
+                ),
+                QUARANTINE_TABLE,
+            )
+        return RunResult(run_id, lineage, lambda: catalog.read(EXTRACTED_TABLE))
 
-    return RunResult(run_id=run_id, extracted=extracted, lineage=lineage)
+    extracted = strip_metrics(with_metrics)
+    return RunResult(run_id, lineage_rollup(with_metrics, run_id), lambda: extracted)

@@ -189,3 +189,57 @@ def test_lineage_accounts_for_every_doc(spark, tmp_path):
     assert sum(r["failures"] for r in rows) == 3
     assert all(r["run_id"] == "rX" for r in rows)
     assert sum(r["engine_recall"] for r in rows) >= 3
+
+
+def _half_committed(spark, tmp_path):
+    """A warehouse already holding half the fixture corpus, the full
+    corpus as the next run's source, and how many docs that run has
+    left to extract."""
+    catalog = TableCatalog(spark, str(tmp_path), use_iceberg=False)
+    src = fixtures_df(spark)
+    ids = sorted(r["doc_id"] for r in src.select("doc_id").collect())
+    run_extraction(spark, src.filter(F.col("doc_id").isin(ids[::2])), catalog=catalog, run_id="r1")
+    return catalog, src, len(ids[1::2])
+
+
+def test_resume_without_oversize_writes_no_quarantine(spark, tmp_path):
+    catalog, src, _ = _half_committed(spark, tmp_path)
+    run_extraction(spark, src, catalog=catalog, run_id="r2")
+    assert not catalog.exists("_quarantine")
+    assert not (tmp_path / "_quarantine").exists()
+
+
+def test_resume_run_job_count(spark, tmp_path):
+    """The commit path evaluates each plan once: one sizing aggregate
+    (which also counts oversize docs), no quarantine append when there
+    is nothing to quarantine, and no read-back of _lineage or the
+    output table. Jobs for this run on local[4] with AQE: 15 before
+    the sizing and quarantine passes were merged and the read-backs
+    dropped, 10 after."""
+    catalog, src, _ = _half_committed(spark, tmp_path)
+    sc = spark.sparkContext
+    group = f"job-count-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        run_extraction(spark, src, catalog=catalog, run_id="r2")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 10
+
+
+def test_run_lineage_equals_committed_lineage(spark, tmp_path):
+    catalog, src, todo = _half_committed(spark, tmp_path)
+    result = run_extraction(spark, src, catalog=catalog, run_id="r2")
+    committed = catalog.read("_lineage").filter("run_id = 'r2'")
+    assert sorted(result.lineage.collect()) == sorted(committed.collect())
+    assert sum(r["docs_in"] for r in result.lineage.collect()) == todo
+
+
+def test_resume_ignores_duplicate_done_rows(spark):
+    from claude_readability_hook_spark.operators.resume import cache_hits, remaining_documents
+
+    src = fixtures_df(spark)
+    once = src.filter("doc_id in ('simple', 'spa_markers')").select("doc_id")
+    twice = once.unionByName(src.filter("doc_id = 'simple'").select("doc_id"))
+    for op in (remaining_documents, cache_hits):
+        assert sorted(op(src, twice).collect()) == sorted(op(src, once).collect())

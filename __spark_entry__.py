@@ -1041,19 +1041,20 @@ def q_bpe_encode_trie(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst expression grows with k, so the table can reach real
     (30k+) sizes. Same semantics as the chain, so the same oracle."""
     from claude_readability_hook_spark.operators.bpetrain import (
-        bpe_encode_counts_trained,
-        learn_bpe_merges_and_table,
+        bpe_encode_counts_trie,
+        learn_bpe_merges,
     )
 
     docs = _docs(spark, sf_dir)
-    # r9: trained-table reuse (the heap/trie encoder remains the
-    # pre-trained-ARTIFACT path — load_bpe_artifact consumers and
-    # tests/test_bpetrain.py differential-test it at k=1000; when the
-    # trainer just ran on this corpus its final table holds the same
-    # encode result as the heap/trie encoder — empirically verified at
-    # k=6 / k=1000 on the fixtures, not identical by construction)
-    _, table = learn_bpe_merges_and_table(docs, k=BPE_K)
-    return bpe_encode_counts_trained(docs, table)
+    # the heap/trie artifact encoder, so this pair covers the path
+    # load_bpe_artifact consumers run; q_bpe_encode reuses the
+    # trainer's final table instead. The two agree on this corpus at
+    # BPE_K (empirically verified against the same oracle, and
+    # differential-tested at k=6 / k=1000 in tests/test_bpetrain.py),
+    # not by construction: a later merge can recreate an earlier
+    # merge's adjacency, which the heap encoder merges and the
+    # sequential trainer does not
+    return bpe_encode_counts_trie(docs, learn_bpe_merges(docs, k=BPE_K))
 
 
 def _bpe_sym_sql(word: str) -> str:

@@ -135,10 +135,12 @@ def audio_dup_pairs(
 ) -> DataFrame:
     """(ref_a, ref_b, distance): near-duplicate audio pairs at exact
     Hamming distance ≤ max_distance over the envelope fingerprint —
-    a thin retarget of the shared banded machinery (imagededup
-    .image_dup_pairs), which is generic over any 64-bit hash column:
-    same completeness guarantee (8 bands ⇒ every pair with distance
-    ≤ 7 shares a band), same bucket-cap quarantine discipline."""
+    image_dup_pairs on the `afp` column, which is generic over any
+    64-bit hash: the same 8-band completeness guarantee (every pair
+    with distance ≤ 7 shares a band), the same blocking.bucket_pairs
+    expansion and in-row xor+bit_count verify, and the same bucket
+    cap (image_oversize_buckets(fps, hash_col='afp') reports the
+    dropped buckets)."""
     return image_dup_pairs(
         fps,
         max_distance=max_distance,

@@ -16,11 +16,15 @@ Scale notes (the design point is 10^12 docs):
     r9 via mapInArrow batch loops (hashlib md5 == Spark md5, exact
     int64 arithmetic), which replaced the interpreted higher-order
     Column forms (CodegenFallback) at identical results
-  - minhash banding keeps the self-join key space sparse: expected
-    bucket size is O(1) for non-duplicates, so the join output is
+  - minhash bands and shingles are buckets; blocking.bucket_pairs
+    expands them to pairs in the JVM (codegen'd generators, no Python
+    stage), so each operator runs exactly one Python stage — the one
+    that reads the text
+  - minhash banding keeps the bucket key space sparse: expected
+    bucket size is O(1) for non-duplicates, so the pair output is
     ~linear in the number of true near-dup pairs
-  - the jaccard verifier joins on exploded shingles and would blow up
-    on boilerplate shingles; the hot-shingle cap (drop shingles shared
+  - the jaccard verifier buckets on shingles and would blow up on
+    boilerplate shingles; the hot-shingle cap (drop shingles shared
     by > max_shingle_df docs) bounds worst-case fanout — the same
     trick as salting a skewed join key
 """
@@ -31,6 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .._pyworker import python_stage
+from .blocking import bucket_pairs, oversize_buckets
 from .textcommon import norm_text_expr
 
 
@@ -142,41 +147,6 @@ def h32_expr(s):
       (strpos('0123456789abcdef', substr(md5(s), j, 1)) - 1)
       * CAST(16**(8-j) AS BIGINT)))"""
     return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
-
-
-def _expand_pairs(grouped: DataFrame, ids_col: str = "ids") -> DataFrame:
-    """Bucket rows (… , ids: sorted array) → distinct (doc_a, doc_b)
-    pairs, expanded where the bucket row lives (no self-join, so the
-    bucket pipeline is computed exactly once). The m² expansion runs
-    as a mapInArrow batch loop — the nested sequence/transform/struct
-    Column form it replaces is interpreted per element
-    (CodegenFallback); the distinct stays a JVM hash agg."""
-    buckets = grouped.select(F.col(ids_col).alias("ids"))
-    elem_type = buckets.schema["ids"].dataType.elementType.simpleString()
-
-    def expand(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            col = batch.column("ids")
-            et = col.type.value_type
-            a: list = []
-            b: list = []
-            for ids in col.to_pylist():
-                m = len(ids)
-                for i in range(m - 1):
-                    x = ids[i]
-                    for j in range(i + 1, m):
-                        a.append(x)
-                        b.append(ids[j])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(a, et), pa.array(b, et)],
-                names=["doc_a", "doc_b"],
-            )
-
-    return buckets.mapInArrow(
-        python_stage(expand), schema=f"doc_a {elem_type}, doc_b {elem_type}"
-    ).distinct()
 
 
 def minhash_signature(
@@ -307,9 +277,11 @@ def minhash_lsh_candidates(
 ) -> DataFrame:
     """Candidate near-dup pairs (doc_a < doc_b) sharing ≥ 1 LSH band.
 
-    Bucket → in-row pair expansion → distinct; the expansion output is
-    ~linear in true near-dup pairs. Two guards bound the worst case
-    (the same fanout control as the jaccard operator's max_shingle_df):
+    Buckets → blocking.bucket_pairs (JVM generators over the sorted
+    ids, no Python stage) → distinct, since a pair sharing several
+    bands comes out once per band; the output is ~linear in true
+    near-dup pairs. Two guards bound the worst case (the same fanout
+    control as the jaccard operator's max_shingle_df):
 
       exact_dedup_first  verbatim clones are collapsed to one
                          representative BEFORE banding (they share
@@ -318,16 +290,18 @@ def minhash_lsh_candidates(
                          bucket); the anti-join runs on the NARROW
                          signature table so text never shuffles; the
                          clones themselves are exact_duplicates' job
-      max_bucket_size    buckets larger than this are dropped instead
-                         of expanded to O(m²) pairs / OOM'ing the
-                         collect — count them via
-                         minhash_oversize_buckets for quarantine"""
-    grouped = minhash_band_buckets(
+      max_bucket_size    buckets larger than this are dropped before
+                         any of their O(m²) pairs is built — count
+                         them via minhash_oversize_buckets for
+                         quarantine"""
+    buckets = minhash_band_buckets(
         df, num_hashes, band_size, text_col, n, exact_dedup_first
     )
-    if max_bucket_size is not None:
-        grouped = grouped.filter(F.size("ids") <= max_bucket_size)
-    return _expand_pairs(grouped)
+    return (
+        bucket_pairs(buckets, "ids", max_bucket_size)
+        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
+        .distinct()
+    )
 
 
 def minhash_oversize_buckets(
@@ -340,12 +314,12 @@ def minhash_oversize_buckets(
     exact_dedup_first: bool = True,
 ) -> DataFrame:
     """The buckets minhash_lsh_candidates dropped: (band_idx, band_key,
-    n_docs) for the quarantine/lineage sink — metadata only, never the
-    member list itself."""
-    return (
-        minhash_band_buckets(df, num_hashes, band_size, text_col, n, exact_dedup_first)
-        .filter(F.size("ids") > max_bucket_size)
-        .select("band_idx", "band_key", F.size("ids").cast("long").alias("n_docs"))
+    n_docs) for the quarantine/lineage sink."""
+    buckets = minhash_band_buckets(
+        df, num_hashes, band_size, text_col, n, exact_dedup_first
+    )
+    return oversize_buckets(
+        buckets, "ids", max_bucket_size, ("band_idx", "band_key"), "n_docs"
     )
 
 
@@ -530,8 +504,10 @@ def ngram_jaccard_pairs(
     """Exact n-gram Jaccard similarity for pairs sharing ≥1 shingle.
 
     (doc_a, doc_b, jaccard) with jaccard rounded to 6dp and ≥ threshold.
-    The max_shingle_df cap drops boilerplate shingles before the
-    self-join — fanout control, same role as skew-salting."""
+    Each shingle buckets the docs holding it; blocking.bucket_pairs
+    drops shingles held by > max_shingle_df docs (fanout control, same
+    role as skew-salting) and expands the rest in the JVM, and one
+    groupBy counts each pair's shared shingles."""
     shingled = doc_shingles(df, text_col, n).filter(F.size("shingles") > 0)
 
     # Carry each doc's shingle-set size THROUGH the bucket expansion so
@@ -541,45 +517,21 @@ def ngram_jaccard_pairs(
     # interpreted per element and measured 8× slower than bigint ops.
     # Capacity: doc_id < 2^41 (2·10^12, the design point) and
     # shingle count < 2^22 (a 10 MB doc caps out around 2M tokens).
-    #
-    # groupBy + in-row pair expansion instead of a self-join: the
-    # shingle pipeline is computed once, and the hot-shingle cap is a
-    # plain size filter on the collected bucket (df > max ⇒ dropped).
+    # Sorting the packed keys sorts by doc_id, so every pair has
+    # ka < kb and doc_a < doc_b.
     shift = 1 << 22
     exploded = shingled.select(
         (F.col("doc_id") * shift + F.size("shingles")).alias("dk"),
         F.explode("shingles").alias("shingle"),
     )
-    grouped = (
+    buckets = (
         exploded.groupBy("shingle")
         .agg(F.sort_array(F.collect_list("dk")).alias("ks"))
-        .filter((F.size("ks") >= 2) & (F.size("ks") <= max_shingle_df))
+        .filter(F.size("ks") >= 2)
     )
-    # m² bucket expansion as a mapInArrow batch loop (the nested
-    # sequence/transform/struct Column form is interpreted per
-    # element — CodegenFallback); the shared-count hash agg stays JVM
-    def expand(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            a: list[int] = []
-            b: list[int] = []
-            for ks in batch.column("ks").to_pylist():
-                m = len(ks)
-                for i in range(m - 1):
-                    x = ks[i]
-                    for j in range(i + 1, m):
-                        a.append(x)
-                        b.append(ks[j])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(a, pa.int64()), pa.array(b, pa.int64())],
-                names=["ka", "kb"],
-            )
-
     shared = (
-        grouped.select("ks")
-        .mapInArrow(python_stage(expand), schema="ka long, kb long")
-        .groupBy("ka", "kb")
+        bucket_pairs(buckets, "ks", max_shingle_df)
+        .groupBy(F.col("a").alias("ka"), F.col("b").alias("kb"))
         .agg(F.count("*").alias("shared"))
     )
     return shared.select(

@@ -16,8 +16,9 @@ text MinHash-LSH ladder (operators/dedup.py):
                         band whenever d ≤ 7 (pigeonhole over 8 blocks)
                         — the banded pre-filter that avoids the
                         all-pairs O(n²) distance join.
-  image_dup_pairs       bucket → in-row pair expansion with the exact
-                        Hamming distance computed IN the row (the
+  image_dup_pairs       bucket → blocking.bucket_pairs (the shared
+                        JVM expansion, no Python stage) with the exact
+                        Hamming distance computed IN the pair row (the
                         (ref, hash) struct rides the bucket, so no
                         join back to the hash table re-derives the
                         decode) → distance ≤ max_distance pairs.
@@ -26,9 +27,10 @@ text MinHash-LSH ladder (operators/dedup.py):
                         loop, keeper = min ref.
 
 Scale discipline (the dedup.py contract): banding bounds candidate
-generation, max_bucket_size caps pathological buckets (a solid-color
-meme template shared by millions of images lands one bucket) with
-image_oversize_buckets as the quarantine metadata sink, and every
+generation, max_bucket_size drops pathological buckets before
+expansion (a solid-color meme template shared by millions of images
+lands one bucket) with image_oversize_buckets as the quarantine
+metadata sink — both through operators/blocking.py — and every
 stage past the hash is narrow (ref + long). Reference parity: none —
 the reference treats media as opaque URLs; this is the LLM-pipeline
 brief (VERDICT r5 'What's missing #1').
@@ -50,6 +52,7 @@ from pyspark.sql.types import (
 )
 
 from .._pyworker import python_stage
+from .blocking import bucket_pairs, oversize_buckets
 
 IMAGE_HASH = StructType(
     [
@@ -231,35 +234,21 @@ def image_dup_pairs(
 
     Banding finds every pair with distance ≤ n_bands − 1 (defaults:
     8 bands ⇒ complete for the max_distance=3 default with room to
-    raise it); the exact xor+bit_count check runs IN the expanded row
-    because each bucket member carries its hash — no join back through
-    the decode pipeline. Buckets above max_bucket_size are dropped
-    before the O(m²) expansion (image_oversize_buckets records them);
-    distinct collapses pairs found by several bands."""
-    grouped = hamming_band_buckets(hashes, n_bands, ref_col, hash_col)
-    if max_bucket_size is not None:
-        grouped = grouped.filter(F.size("members") <= max_bucket_size)
-    m = F.size("members")
-    pair_structs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), m - 1),
-            lambda i: F.transform(
-                F.sequence(i + 1, m),
-                lambda j: F.struct(
-                    F.element_at(F.col("members"), i).alias("a"),
-                    F.element_at(F.col("members"), j).alias("b"),
-                ),
-            ),
-        )
-    )
+    raise it). blocking.bucket_pairs drops buckets above
+    max_bucket_size (image_oversize_buckets records them) and expands
+    the rest in the JVM; each member carries its hash, so the exact
+    xor+bit_count check runs in the pair row — no join back through
+    the decode pipeline. distinct collapses pairs found by several
+    bands."""
+    buckets = hamming_band_buckets(hashes, n_bands, ref_col, hash_col)
     return (
-        grouped.select(F.explode(pair_structs).alias("p"))
+        bucket_pairs(buckets, "members", max_bucket_size)
         .select(
-            F.col("p.a.ref").alias("ref_a"),
-            F.col("p.b.ref").alias("ref_b"),
-            F.bit_count(
-                F.col("p.a.h").bitwiseXOR(F.col("p.b.h"))
-            ).cast("long").alias("distance"),
+            F.col("a.ref").alias("ref_a"),
+            F.col("b.ref").alias("ref_b"),
+            F.bit_count(F.col("a.h").bitwiseXOR(F.col("b.h")))
+            .cast("long")
+            .alias("distance"),
         )
         .filter(F.col("distance") <= max_distance)
         .distinct()
@@ -274,16 +263,10 @@ def image_oversize_buckets(
     hash_col: str = "dhash",
 ) -> DataFrame:
     """The buckets image_dup_pairs dropped: (band_idx, band_val,
-    n_refs) metadata for the quarantine/lineage sink — the
-    minhash_oversize_buckets pattern."""
-    return (
-        hamming_band_buckets(hashes, n_bands, ref_col, hash_col)
-        .filter(F.size("members") > max_bucket_size)
-        .select(
-            "band_idx",
-            "band_val",
-            F.size("members").cast("long").alias("n_refs"),
-        )
+    n_refs) metadata for the quarantine/lineage sink."""
+    buckets = hamming_band_buckets(hashes, n_bands, ref_col, hash_col)
+    return oversize_buckets(
+        buckets, "members", max_bucket_size, ("band_idx", "band_val"), "n_refs"
     )
 
 

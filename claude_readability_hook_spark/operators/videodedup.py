@@ -21,11 +21,12 @@ one frame of. The ladder here:
                        images over the signature's frames (two frames
                        within Hamming distance 7 share a band,
                        pigeonhole), the signature carried in each
-                       bucket member → distinct candidate VIDEO
-                       pairs. Any video pair with ≥1 close frame pair
-                       becomes a candidate, so the final criterion
-                       below loses nothing (it requires ≥1 aligned
-                       frame within max_frame_distance ≤ 7).
+                       bucket member → one member per video →
+                       blocking.bucket_pairs → distinct candidate
+                       VIDEO pairs. Any video pair with ≥1 close
+                       frame pair becomes a candidate, so the final
+                       criterion below loses nothing (it requires ≥1
+                       aligned frame within max_frame_distance ≤ 7).
   video_dup_pairs      candidate pairs with both signatures in the
                        row → exact aligned verify IN the row:
                        matched_frames (aligned frames within
@@ -66,6 +67,8 @@ from pyspark.sql.types import (
 )
 
 from .._pyworker import python_stage
+from .blocking import bucket_pairs, oversize_buckets
+from .imagededup import hamming_band_buckets
 
 VIDEO_FRAME_HASH = StructType(
     [
@@ -158,7 +161,7 @@ def video_dup_candidates(
     expansion (video_oversize_buckets records them)."""
     return (
         _candidate_signatures(frame_hashes, n_bands, max_bucket_size)
-        .select(F.col("p.a.ref").alias("ref_a"), F.col("p.b.ref").alias("ref_b"))
+        .select(F.col("a.ref").alias("ref_a"), F.col("b.ref").alias("ref_b"))
         .distinct()
     )
 
@@ -166,16 +169,15 @@ def video_dup_candidates(
 def _candidate_signatures(
     frame_hashes: DataFrame, n_bands: int, max_bucket_size: int | None
 ) -> DataFrame:
-    """One row per (shared bucket, video pair): p = struct(a, b) of
+    """One row per (shared bucket, video pair): (a, b) structs of
     (ref, frames) signatures, a.ref < b.ref, frames the video's sorted
     (sample_idx, fhash) list. One aggregate builds the signatures;
     their frames are banded with the signature carried in each bucket
     member, so callers verify in-row instead of joining back to the
     frame table. The cap counts one member per decoded frame — the
     buckets video_oversize_buckets reports — and only then do the kept
-    buckets collapse to one member per video."""
-    from .imagededup import hamming_band_buckets
-
+    buckets collapse to one member per video and expand through
+    blocking.bucket_pairs."""
     sigs = (
         frame_hashes.filter(F.col("frame_ok") == "ok")
         .groupBy("media_ref")
@@ -197,7 +199,7 @@ def _candidate_signatures(
     # one member per video: a static shot's repeated frames collapse,
     # and refs come out strictly ascending (members sort on ref first),
     # so every expanded pair is a cross-video pair; a bucket left with
-    # one video has no pair to expand
+    # one video expands to no pair
     videos = grouped.select(
         F.array_distinct(
             F.transform(
@@ -205,21 +207,8 @@ def _candidate_signatures(
                 lambda m: F.struct(m["ref"].alias("ref"), m["frames"].alias("frames")),
             )
         ).alias("members")
-    ).filter(F.size("members") >= 2)
-    m = F.size("members")
-    pair_structs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), m - 1),
-            lambda i: F.transform(
-                F.sequence(i + 1, m),
-                lambda j: F.struct(
-                    F.element_at(F.col("members"), i).alias("a"),
-                    F.element_at(F.col("members"), j).alias("b"),
-                ),
-            ),
-        )
     )
-    return videos.select(F.explode(pair_structs).alias("p"))
+    return bucket_pairs(videos, "members", None)
 
 
 def video_oversize_buckets(
@@ -228,16 +217,11 @@ def video_oversize_buckets(
     max_bucket_size: int = 50,
 ) -> DataFrame:
     """The buckets video_dup_candidates dropped: (band_idx, band_val,
-    n_refs) quarantine metadata — the image/minhash oversize
-    pattern."""
-    from .imagededup import image_oversize_buckets
-
-    return image_oversize_buckets(
-        frame_hashes.filter(F.col("frame_ok") == "ok"),
-        n_bands,
-        max_bucket_size,
-        ref_col="media_ref",
-        hash_col="fhash",
+    n_refs) quarantine metadata, one member per decoded frame."""
+    ok = frame_hashes.filter(F.col("frame_ok") == "ok")
+    buckets = hamming_band_buckets(ok, n_bands, hash_col="fhash")
+    return oversize_buckets(
+        buckets, "members", max_bucket_size, ("band_idx", "band_val"), "n_refs"
     )
 
 
@@ -265,7 +249,7 @@ def video_dup_pairs(
     expanded row — no join back to the frame table, hence one decode
     per query however the plan is pruned. Three shuffles: signature,
     band, distinct."""
-    fa, fb = F.col("p.a.frames"), F.col("p.b.frames")
+    fa, fb = F.col("a.frames"), F.col("b.frames")
     # per aligned (equal sample_idx) frame pair within distance — the
     # count an equi-join on (ref, sample_idx) would produce
     matched = F.aggregate(
@@ -286,8 +270,8 @@ def video_dup_pairs(
     return (
         _candidate_signatures(frame_hashes, n_bands, max_bucket_size)
         .select(
-            F.col("p.a.ref").alias("ref_a"),
-            F.col("p.b.ref").alias("ref_b"),
+            F.col("a.ref").alias("ref_a"),
+            F.col("b.ref").alias("ref_b"),
             matched.alias("matched_frames"),
             F.greatest(F.size(fa), F.size(fb)).cast("long").alias("n_frames"),
         )

@@ -62,17 +62,24 @@ def test_minhash_bucket_cap_bounds_boilerplate_blowup(spark):
     # min ⇒ near-all docs share the full signature (one giant bucket)
     base = " ".join(f"word{j}" for j in range(300)) + " "
     rows = [(i, base + f"unique-{i}") for i in range(n)]
+    # cap + 1 docs with the SAME shingle set (one period repeated r
+    # times) but distinct text: every band is one bucket of exactly 51
+    period = " ".join(f"loop{j}" for j in range(20)) + " "
+    edge = list(range(1000, 1051))
+    rows += [(d, period * (d - 998)) for d in edge]
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
     # not exact dups — the pre-pass must keep all of them
-    assert exact_dedup_keepers(df).count() == n
+    assert exact_dedup_keepers(df).count() == n + len(edge)
 
-    pairs = minhash_lsh_candidates(df, max_bucket_size=50)
+    pairs = minhash_lsh_candidates(df, max_bucket_size=50).collect()
     # uncapped this would be ~ n*(n-1)/2 = 3160 pairs from one bucket
-    assert pairs.count() < n
+    assert len(pairs) < n
+    assert not {d for r in pairs for d in r} & set(edge)
 
     oversize = minhash_oversize_buckets(df, max_bucket_size=50).collect()
     assert oversize and all(r["n_docs"] > 50 for r in oversize)
+    assert sum(r["n_docs"] == 51 for r in oversize) == 4  # one per band
 
 
 def test_minhash_exact_clones_collapse_without_blowup(spark):
@@ -93,6 +100,61 @@ def test_minhash_exact_clones_collapse_without_blowup(spark):
     groups = exact_duplicates(df).collect()
     assert len(groups) == 1 and groups[0]["n_docs"] == n
     assert groups[0]["keeper_doc_id"] == 0
+
+
+def _plan(df) -> str:
+    # the initial physical plan: built without running a job
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_near_dup_pairs_run_one_python_stage(spark):
+    """Signatures and shingles are the only Python stages: the bucket
+    expansion runs in the JVM."""
+    from claude_readability_hook_spark.operators.dedup import (
+        minhash_lsh_candidates,
+        ngram_jaccard_pairs,
+    )
+
+    df = spark.createDataFrame([(1, "a b c d"), (2, "a b c e")], "doc_id long, text string")
+    for op in (minhash_lsh_candidates, ngram_jaccard_pairs):
+        plan = _plan(op(df))
+        assert plan.count("MapInArrow") == 1, plan
+        assert "posexplode" in plan
+
+
+_PYTHON_NODES = ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+
+
+def test_bucket_pairs_hot_bucket_streams_in_the_jvm(spark):
+    from claude_readability_hook_spark.operators.blocking import bucket_pairs
+
+    hot = spark.createDataFrame([(list(range(2000)),)], "ids array<long>")
+    pairs = bucket_pairs(hot, "ids", None)
+    assert not any(node in _plan(pairs) for node in _PYTHON_NODES)
+    assert pairs.count() == 2000 * 1999 // 2
+
+
+def test_bucket_pairs_equal_combinations_and_purge(spark):
+    """Every i < j pair of each kept bucket, in member order; buckets
+    above the cap are dropped and reported, a bucket AT the cap kept."""
+    from itertools import combinations
+
+    from claude_readability_hook_spark.operators.blocking import (
+        bucket_pairs,
+        oversize_buckets,
+    )
+
+    rows = [(k, [10 * k + j for j in range(k)]) for k in range(7)]
+    rows += [(7, None), (8, [3, 3])]
+    buckets = spark.createDataFrame(rows, "k long, ids array<long>")
+    got = sorted(tuple(r) for r in bucket_pairs(buckets, "ids", 5).collect())
+    want = sorted(
+        p for _k, ids in rows if ids and len(ids) <= 5 for p in combinations(ids, 2)
+    )
+    assert got == want
+    over = oversize_buckets(buckets, "ids", 5, ("k",), "n_ids").collect()
+    assert [tuple(r) for r in over] == [(6, 6)]
+    assert len(bucket_pairs(buckets, "ids", None).collect()) == len(want) + 15
 
 
 def test_clusters_chain_components_to_min_label(spark):

@@ -116,10 +116,11 @@ def test_pairs_exact_distance_and_banding_completeness(spark):
         ("c", signed(base ^ (1 << 63))),  # distance 1 from a (sign bit!)
         ("d", signed(~base)),             # complement: distance 64
     ]
-    got = {
-        (r["ref_a"], r["ref_b"]): r["distance"]
-        for r in image_dup_pairs(_hash_df(spark, items), max_distance=3).collect()
-    }
+    pairs = image_dup_pairs(_hash_df(spark, items), max_distance=3)
+    got = {(r["ref_a"], r["ref_b"]): r["distance"] for r in pairs.collect()}
+    # buckets expand through blocking.bucket_pairs' JVM generators
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "posexplode" in plan and "sequence(" not in plan
     assert got[("a", "b")] == 3
     assert got[("a", "c")] == 1
     assert ("b", "c") not in got  # distance 4 > max_distance
@@ -136,16 +137,19 @@ def test_bucket_cap_drops_and_quarantines(spark):
     )
 
     items = [(f"m{i}", 42) for i in range(30)] + [("x", 1 << 40), ("y", (1 << 40) ^ 1)]
+    # cap + 1 refs whose hash puts them in 8 buckets of their own
+    items += [(f"e{i:02d}", 0x0303030303030303) for i in range(11)]
     hashes = _hash_df(spark, items)
     pairs = image_dup_pairs(hashes, max_distance=3, max_bucket_size=10)
     got = {(r["ref_a"], r["ref_b"]) for r in pairs.collect()}
-    assert got == {("x", "y")}  # the meme clique was capped away
+    assert got == {("x", "y")}  # the meme clique and the 11 were capped away
     over = image_oversize_buckets(hashes, max_bucket_size=10).collect()
     # the meme clique (30 refs) plus x/y's zero bands where they overlap
-    assert over and all(r["n_refs"] in (30, 32) for r in over)
-    # and without the cap the clique expands fully: 30·29/2 pairs
+    assert over and all(r["n_refs"] in (30, 32, 11) for r in over)
+    assert sum(r["n_refs"] == 11 for r in over) == 8
+    # and without the cap the cliques expand fully: 30·29/2 + 11·10/2
     uncapped = image_dup_pairs(hashes, max_distance=3, max_bucket_size=None)
-    assert uncapped.count() == 30 * 29 // 2 + 1
+    assert uncapped.count() == 30 * 29 // 2 + 1 + 11 * 10 // 2
 
 
 def test_clusters_transitive_closure(spark):

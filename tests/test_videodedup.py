@@ -118,6 +118,8 @@ def test_pairs_plan_decodes_once(spark):
     # the inner executedPlan is the final one that ran
     final = pairs._jdf.queryExecution().executedPlan().executedPlan().toString()
     assert final.count("MapInPandas") == 1
+    # the collapsed buckets expand through JVM generators
+    assert "posexplode" in final and "sequence(" not in final
 
 
 def test_prefix_clip_normalized_by_longer_video(spark):
@@ -141,8 +143,12 @@ def test_bucket_cap_quarantines_degenerate_bucket(spark):
     # 12 videos sharing identical frames (a station ident): with the
     # cap below the bucket size every candidate is dropped AND the
     # quarantine table reports the oversize buckets
+    # — and cap + 1 one-frame videos of other content are dropped too
+    checker = [[255 * ((x // 3 + y // 2) % 2) for x in range(24)] for y in range(16)]
+    clip = encode_minimal_mp4(sample_payloads=[encode_png(checker)])
+    edge = [(f"v:edge{i}", clip) for i in range(6)]
     media = _media_df(
-        spark, [(f"v:ident{i:02d}", _gradient_mp4(1, 3)) for i in range(12)]
+        spark, [(f"v:ident{i:02d}", _gradient_mp4(1, 3)) for i in range(12)] + edge
     )
     fh = video_frame_hashes(media)
     assert video_dup_candidates(fh, max_bucket_size=5).count() == 0
@@ -150,8 +156,9 @@ def test_bucket_cap_quarantines_degenerate_bucket(spark):
     over = video_oversize_buckets(fh, max_bucket_size=5)
     assert over.count() > 0
     assert over.agg(F.max("n_refs")).first()[0] >= 12
+    assert over.filter(F.col("n_refs") == 6).count() > 0
     # and without the cap the same buckets expand to all pairs
-    assert video_dup_candidates(fh, max_bucket_size=None).count() == 66
+    assert video_dup_candidates(fh, max_bucket_size=None).count() == 66 + 15
 
 
 def test_clusters_transitive_closure_min_ref_keeper(spark):
